@@ -1,7 +1,5 @@
 package graft.xml
 
-import java.io.ByteArrayOutputStream
-
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
@@ -45,60 +43,136 @@ object XmlElementInputFormat {
   * splits), the `graft-xml` FileFormat
   * ([[org.apache.spark.sql.graft.XmlRowTagFileFormat]] — batch AND
   * streaming reads) and [[XmlRecordSplit]] (whole strings).
-  * `read` supplies bytes (-1 = EOF); `pos` counts absolute consumed bytes
-  * starting from `startPos`. */
-final class XmlRecordScanner(read: () => Int,
+  *
+  * The scanner reads `in` a buffer at a time (64 KB; the caller closes
+  * it) and `pos` is the absolute offset of the next unconsumed byte,
+  * counted from `startPos`. Only `<` can change scan state, so the runs between tags are
+  * skipped (looking for a record) or copied (capturing one) in bulk.
+  *
+  * [[nextRecord]] returns true when a record is ready; it is then
+  * `recordBytes(0 until recordLength)`, starting at absolute offset
+  * `recordStart`. The capture array is reused, so those bytes are valid
+  * only until the next [[nextRecord]] call — callers copy what they keep. */
+final class XmlRecordScanner(in: java.io.InputStream,
     rowTag: Array[Byte], startPos: Long) {
 
-  var pos: Long = startPos
+  private val buf = new Array[Byte](64 * 1024)
+  private var bufPos = 0
+  private var bufLen = 0
+  private var bufBase = startPos // absolute offset of buf(0)
 
-  private def read1(): Int = {
-    val b = read()
-    if (b >= 0) pos += 1
-    b
+  private var capture = new Array[Byte](8192)
+  private var capLen = 0
+  private var capturing = false
+
+  private var recStart = -1L
+
+  /** `rowTag` as unsigned byte values, comparable with [[read1]]'s. */
+  private val tag: Array[Int] = rowTag.map(_ & 0xff)
+
+  def pos: Long = bufBase + bufPos
+  def recordStart: Long = recStart
+  def recordBytes: Array[Byte] = capture
+  def recordLength: Int = capLen
+
+  /** Refill `buf` from `in`; false at EOF. */
+  private def fill(): Boolean = {
+    bufBase += bufLen
+    bufPos = 0
+    bufLen = 0
+    val n = in.read(buf, 0, buf.length)
+    if (n <= 0) false else { bufLen = n; true }
   }
+
+  private def put(b: Byte): Unit = {
+    if (capLen == capture.length) grow(capLen + 1)
+    capture(capLen) = b
+    capLen += 1
+  }
+
+  private def append(src: Array[Byte], off: Int, len: Int): Unit = {
+    if (capLen + len > capture.length) grow(capLen + len)
+    System.arraycopy(src, off, capture, capLen, len)
+    capLen += len
+  }
+
+  /** The capture never grows past [[XmlElementInputFormat.MaxRecordBytes]]:
+    * a record that would is a missing close tag, not data. */
+  private def grow(need: Int): Unit = {
+    if (need > XmlElementInputFormat.MaxRecordBytes)
+      throw new java.io.IOException(
+        s"graft.xml: record at offset $recStart exceeds " +
+          s"${XmlElementInputFormat.MaxRecordBytes} bytes — missing " +
+          s"</${new String(rowTag, "UTF-8")}>?")
+    capture = java.util.Arrays.copyOf(capture, math.min(
+      math.max(capture.length.toLong * 2, need.toLong),
+      XmlElementInputFormat.MaxRecordBytes.toLong).toInt)
+  }
+
+  /** One byte (-1 = EOF), captured while a record is being captured. */
+  private def read1(): Int = {
+    if (bufPos >= bufLen && !fill()) return -1
+    val b = buf(bufPos)
+    bufPos += 1
+    if (capturing) put(b)
+    b & 0xff
+  }
+
+  /** Consume through the next '<' (captured while capturing); false at EOF.
+    * The bytes before it cannot change scan state, so they move in bulk. */
+  private def throughLt(): Boolean = {
+    while (true) {
+      if (bufPos >= bufLen && !fill()) return false
+      var i = bufPos
+      while (i < bufLen && buf(i) != '<') i += 1
+      val found = i < bufLen
+      val stop = if (found) i + 1 else i
+      if (capturing) append(buf, bufPos, stop - bufPos)
+      bufPos = stop
+      if (found) return true
+    }
+    false
+  }
+
+  /** Continue after byte `b` that ended a failed tag match: a '<' starts
+    * the next candidate, anything else resumes the scan after it. */
+  private def resumeAfter(b: Int): Boolean =
+    if (b == '<') true else if (b == -1) false else throughLt()
 
   private def isDelim(c: Int): Boolean =
     c == '>' || c == '/' || c == ' ' || c == '\t' || c == '\r' || c == '\n'
 
   /** Consume the rest of an open tag after `<rowTag` + `delim`; returns the
-    * depth delta: +1 for an open element, 0 for self-closing `<rowTag .../>`.
-    * (In-tag bytes are captured when `buf` is non-null.) */
-  private def finishOpenTag(delim: Int, buf: ByteArrayOutputStream): Int = {
+    * depth delta: +1 for an open element, 0 for self-closing
+    * `<rowTag .../>`. */
+  private def finishOpenTag(delim: Int): Int = {
     if (delim == '>') return 1
     var prev = delim
     var c = read1()
     while (c != -1 && c != '>') {
-      if (buf != null) buf.write(c)
       prev = c
       c = read1()
     }
-    if (c == '>' && buf != null) buf.write('>')
     if (prev == '/') 0 else 1
   }
 
-  /** Match `rowTag` bytes right after a consumed '<' (or "</"); returns the
-    * first non-matching / post-tag byte, or Int.MinValue on a full match
-    * (caller then reads the delimiter). Consumed bytes are captured when
-    * `buf` is non-null. */
-  private def matchTag(buf: ByteArrayOutputStream): Int = {
-    var i = 0
+  /** Match `rowTag` from index `from` against the next bytes; returns the
+    * first non-matching byte (-1 at EOF), or Int.MinValue on a full match
+    * (caller then reads the delimiter). */
+  private def matchTag(from: Int): Int = {
+    var i = from
     while (i < rowTag.length) {
       val c = read1()
-      if (c == -1) return -1
-      if (buf != null) buf.write(c)
-      if (c != rowTag(i)) return c
+      if (c != tag(i)) return c
       i += 1
     }
     Int.MinValue
   }
 
-  /** Consume through `terminator` (already inside the construct). Captured
-    * when `buf` is non-null. Returns false on EOF. KMP failure links keep
-    * overlapping prefixes in sync (e.g. CDATA content "]]]>" must still
-    * terminate on its trailing "]]>"). */
-  private def skipUntil(terminator: Array[Byte],
-      buf: ByteArrayOutputStream): Boolean = {
+  /** Consume through `terminator` (already inside the construct). Returns
+    * false on EOF. KMP failure links keep overlapping prefixes in sync (e.g.
+    * CDATA content "]]]>" must still terminate on its trailing "]]>"). */
+  private def skipUntil(terminator: Array[Byte]): Boolean = {
     val fail = new Array[Int](terminator.length)
     var k = 0
     var i = 1
@@ -112,7 +186,6 @@ final class XmlRecordScanner(read: () => Int,
     while (m < terminator.length) {
       val c = read1()
       if (c == -1) return false
-      if (buf != null) buf.write(c)
       while (m > 0 && c != terminator(m)) m = fail(m - 1)
       if (c == terminator(m)) m += 1
     }
@@ -123,145 +196,106 @@ final class XmlRecordScanner(read: () => Int,
   private val CdataOpen = "![CDATA[".getBytes("US-ASCII")
   private val CommentClose = "-->".getBytes("US-ASCII")
   private val CdataClose = "]]>".getBytes("US-ASCII")
+  private val PiClose = "?>".getBytes("US-ASCII")
+  private val TagClose = ">".getBytes("US-ASCII")
 
   /** After a consumed "<!", classify + skip a comment (`<!--...-->`), CDATA
     * (`<![CDATA[...]]>`), or other markup declaration (to its first '>').
-    * The leading '!' is NOT yet consumed — `first` is the byte after '<'.
-    * Captured when `buf` is non-null. Returns false on EOF. */
-  private def skipBang(buf: ByteArrayOutputStream): Boolean = {
+    * Returns false on EOF. */
+  private def skipBang(): Boolean = {
     // match as much of "!--" / "![CDATA[" as possible; fall back to '>'
     var i = 1 // caller consumed '!' (position 0 of both opener patterns)
-    var c = 0
     var isComment = true
     var isCdata = true
     while ((isComment && i < CommentOpen.length) ||
         (isCdata && i < CdataOpen.length)) {
-      c = read1()
+      val c = read1()
       if (c == -1) return false
-      if (buf != null) buf.write(c)
       if (c == '>') return true // e.g. "<!>" — degenerate, done
       isComment = isComment && i < CommentOpen.length && c == CommentOpen(i)
       isCdata = isCdata && i < CdataOpen.length && c == CdataOpen(i)
-      if (!isComment && !isCdata)
-        return skipUntil(Array('>'.toByte), buf) // DOCTYPE etc.
+      if (!isComment && !isCdata) return skipUntil(TagClose) // DOCTYPE etc.
       i += 1
     }
-    if (isComment && i == CommentOpen.length) skipUntil(CommentClose, buf)
-    else skipUntil(CdataClose, buf)
+    if (isComment && i == CommentOpen.length) skipUntil(CommentClose)
+    else skipUntil(CdataClose)
   }
 
-  /** Next record whose `<rowTag` start lies strictly before `ownedEnd`
-    * (absolute position), or null at EOF / ownership end / truncation. */
-  def nextRecord(ownedEnd: Long): (Long, Array[Byte]) = {
+  /** Advance to the next record whose `<rowTag` start lies strictly before
+    * `ownedEnd` (absolute position); false at EOF / ownership end /
+    * truncation. */
+  def nextRecord(ownedEnd: Long): Boolean = {
     // ---- phase 1: find a record start owned by this range ----
-    var recStart = -1L
+    capturing = false
+    recStart = -1L
     var delim = -1
-    var c = read1()
+    var lt = throughLt()
     while (recStart < 0) {
-      if (c == -1) return null
-      if (c == '<') {
-        val ltPos = pos - 1
-        if (ltPos >= ownedEnd) return null
-        val first = read1()
-        if (first == '!') {
-          // commented-out / CDATA'd rowTag text must not start a record
-          if (!skipBang(null)) return null
-          c = read1()
-        } else if (first == '?') {
-          if (!skipUntil("?>".getBytes("US-ASCII"), null)) return null
-          c = read1()
-        } else if (first == -1) return null
-        else if (first == rowTag(0)) {
-          val m = if (rowTag.length == 1) Int.MinValue else matchTagFrom(1)
-          if (m == Int.MinValue) {
-            val d = read1()
-            if (isDelim(d)) { recStart = ltPos; delim = d }
-            else c = d // e.g. <recs...> with rowTag rec — keep scanning
-          } else c = m match {
-            case -1 => -1
-            case b  => if (b == '<') b else read1()
-          }
-        } else c = if (first == '<') first else read1()
-      } else c = read1()
+      if (!lt) return false
+      val ltPos = pos - 1
+      if (ltPos >= ownedEnd) return false
+      val first = read1()
+      if (first == '!') {
+        // commented-out / CDATA'd rowTag text must not start a record
+        lt = skipBang() && throughLt()
+      } else if (first == '?') {
+        lt = skipUntil(PiClose) && throughLt()
+      } else if (first == tag(0)) {
+        val m = matchTag(1)
+        if (m == Int.MinValue) {
+          val d = read1()
+          if (isDelim(d)) { recStart = ltPos; delim = d }
+          else lt = resumeAfter(d) // e.g. <recs...> with rowTag rec
+        } else lt = resumeAfter(m)
+      } else lt = resumeAfter(first)
     }
     // ---- phase 2: capture through the matching close tag ----
-    val buf = new ByteArrayOutputStream(8192)
-    buf.write('<'); buf.write(rowTag, 0, rowTag.length); buf.write(delim)
-    var depth = finishOpenTag(delim, buf)
+    capLen = 0
+    put('<'.toByte)
+    append(rowTag, 0, rowTag.length)
+    put(delim.toByte)
+    capturing = true
+    var depth = finishOpenTag(delim)
     while (depth > 0) {
-      if (buf.size() > XmlElementInputFormat.MaxRecordBytes)
-        throw new java.io.IOException(
-          s"graft.xml: record at offset $recStart exceeds " +
-            s"${XmlElementInputFormat.MaxRecordBytes} bytes — missing " +
-            s"</${new String(rowTag, "UTF-8")}>?")
-      val b = read1()
-      if (b == -1) return null // truncated trailing record
-      buf.write(b)
-      if (b == '<') {
-        val b2 = read1()
-        if (b2 == -1) return null
-        buf.write(b2)
-        if (b2 == '!') {
-          // comment/CDATA content rides along uninterpreted: tags inside
-          // must not bump the depth counter
-          if (!skipBang(buf)) return null
-        } else if (b2 == '/') {
-          if (matchTag(buf) == Int.MinValue) {
-            val b3 = read1()
-            if (b3 == -1) return null
-            buf.write(b3)
-            if (b3 == '>') depth -= 1
-          }
-        } else if (b2 == rowTag(0)) {
-          // potential nested open tag; first byte already consumed
-          var i = 1
-          var ok = true
-          while (ok && i < rowTag.length) {
-            val cc = read1()
-            if (cc == -1) return null
-            buf.write(cc)
-            if (cc != rowTag(i)) ok = false else i += 1
-          }
-          if (ok) {
-            val d = read1()
-            if (d == -1) return null
-            buf.write(d)
-            if (isDelim(d)) depth += finishOpenTag(d, buf)
-          }
+      if (!throughLt()) return false // truncated trailing record
+      val b2 = read1()
+      if (b2 == -1) return false
+      if (b2 == '!') {
+        // comment/CDATA content rides along uninterpreted: tags inside
+        // must not bump the depth counter
+        if (!skipBang()) return false
+      } else if (b2 == '/') {
+        if (matchTag(0) == Int.MinValue) {
+          val b3 = read1()
+          if (b3 == -1) return false
+          if (b3 == '>') depth -= 1
+        }
+      } else if (b2 == tag(0)) {
+        // potential nested open tag; first byte already consumed
+        val m = matchTag(1)
+        if (m == -1) return false
+        if (m == Int.MinValue) {
+          val d = read1()
+          if (d == -1) return false
+          if (isDelim(d)) depth += finishOpenTag(d)
         }
       }
     }
-    (recStart, buf.toByteArray)
-  }
-
-  /** [[matchTag]] with the first `from` bytes already verified. */
-  private def matchTagFrom(from: Int): Int = {
-    var i = from
-    while (i < rowTag.length) {
-      val c = read1()
-      if (c == -1) return -1
-      if (c != rowTag(i)) return c
-      i += 1
-    }
-    Int.MinValue
+    true
   }
 }
 
-/** Whole-string record splitting for the STREAMING read path: Structured
-  * Streaming's file source delivers whole files (`text` + wholetext), and
-  * this applies the exact same scan the batch input format runs over byte
-  * ranges — one semantics, two transports. */
+/** Whole-string record splitting: [[XmlRecordScanner]] over one in-memory
+  * document, for callers holding XML text rather than files (tests pin the
+  * file reads against it). */
 object XmlRecordSplit {
   def split(doc: String, rowTag: String): Seq[String] = {
-    val in = new java.io.ByteArrayInputStream(doc.getBytes("UTF-8"))
-    val sc = new XmlRecordScanner(() => in.read(),
+    val sc = new XmlRecordScanner(
+      new java.io.ByteArrayInputStream(doc.getBytes("UTF-8")),
       rowTag.getBytes("UTF-8"), 0L)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var rec = sc.nextRecord(Long.MaxValue)
-    while (rec != null) {
-      out += new String(rec._2, "UTF-8")
-      rec = sc.nextRecord(Long.MaxValue)
-    }
+    while (sc.nextRecord(Long.MaxValue))
+      out += new String(sc.recordBytes, 0, sc.recordLength, "UTF-8")
     out.toSeq
   }
 }
@@ -303,26 +337,23 @@ final class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
       // parallelism at scale comes from many files.
       start = 0L
       end = Long.MaxValue
-      in = new java.io.BufferedInputStream(
-        codec.createInputStream(fsin), 64 * 1024)
+      in = codec.createInputStream(fsin)
     } else {
       fsin.seek(start)
-      in = new java.io.BufferedInputStream(fsin, 64 * 1024)
+      in = fsin
     }
-    scanner = new XmlRecordScanner(() => in.read(),
-      tag.getBytes("UTF-8"), start)
+    scanner = new XmlRecordScanner(in, tag.getBytes("UTF-8"), start)
   }
 
   override def nextKeyValue(): Boolean = {
     if (done) return false
-    scanner.nextRecord(end) match {
-      case null =>
-        done = true
-        false
-      case (recStart, bytes) =>
-        key.set(recStart)
-        value.set(bytes)
-        true
+    if (scanner.nextRecord(end)) {
+      key.set(scanner.recordStart)
+      value.set(scanner.recordBytes, 0, scanner.recordLength)
+      true
+    } else {
+      done = true
+      false
     }
   }
 

@@ -30,6 +30,11 @@ import graft.xml.{XmlElementInputFormat, XmlRecordScanner}
   * a 10 GB drop file becomes ~80 independent 128 MB-split tasks instead of
   * one wholetext string).
   *
+  * Each split hands its (seeked or decompressed) input stream straight to
+  * the scanner, which reads it a buffer at a time; a row's `value` wraps
+  * the scanner's reused capture bytes and the row projection makes the
+  * only copy.
+  *
   * Usage: `spark.read.format("graft-xml").option("rowTag", "rec")
   * .load(dir)`; streaming likewise with an explicit `value string` schema
   * (file stream sources require one). Compressed files decode through
@@ -119,28 +124,38 @@ class XmlRowTagFileFormat extends FileFormat with DataSourceRegister
           // the decompressed stream to its end
           start = 0L
           end = Long.MaxValue
-          new java.io.BufferedInputStream(
-            codec.createInputStream(fsin), 64 * 1024)
+          codec.createInputStream(fsin)
         } else {
           fsin.seek(file.start)
-          new java.io.BufferedInputStream(fsin, 64 * 1024)
+          fsin
         }
       Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] {
         _ => try in.close() catch { case _: Exception => }
       })
-      val scanner = new XmlRecordScanner(() => in.read(),
-        rowTag.getBytes("UTF-8"), start)
+      val scanner = new XmlRecordScanner(in, rowTag.getBytes("UTF-8"), start)
       val proj = UnsafeProjection.create(requiredOut)
       val row = new GenericInternalRow(requiredOut.length)
 
+      // the scanner reuses its capture array, so a record is advanced to
+      // only once the previous row was projected (the projection copies)
       new Iterator[InternalRow] {
-        private var rec: (Long, Array[Byte]) = scanner.nextRecord(end)
-        override def hasNext: Boolean = rec != null
+        private var ready = false
+        private var done = false
+        override def hasNext: Boolean = {
+          if (!ready && !done) {
+            ready = scanner.nextRecord(end)
+            if (!ready) {
+              done = true
+              try in.close() catch { case _: Exception => }
+            }
+          }
+          ready
+        }
         override def next(): InternalRow = {
-          val bytes = rec._2
-          rec = scanner.nextRecord(end)
-          if (rec == null) { try in.close() catch { case _: Exception => } }
-          if (emitValue) row.update(0, UTF8String.fromBytes(bytes))
+          if (!hasNext) throw new NoSuchElementException
+          ready = false
+          if (emitValue) row.update(0, UTF8String.fromBytes(
+            scanner.recordBytes, 0, scanner.recordLength))
           proj(row)
         }
       }

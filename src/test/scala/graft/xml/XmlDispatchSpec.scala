@@ -209,7 +209,7 @@ class XmlDispatchSpec extends AnyFunSuite {
     val got = splitterRead(dir.toString + "/one.xml", None)
       .map(_._2.toString).collect().toSeq
     assert(got.sorted == real.sorted)
-    // the string splitter (streaming read path) applies the same scan
+    // the whole-string splitter applies the same scan
     assert(XmlRecordSplit.split(doc, "rec").sorted == real.sorted)
   }
 
