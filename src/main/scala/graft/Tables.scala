@@ -148,9 +148,10 @@ object Tables {
     *    the files instead of failing the run.
     *
     * Both modes compute the identical rows — the mode changes WHERE the
-    * materialized bytes live, never their values. Iterative callers free
-    * superseded rounds via [[unstage]]; harnesses bound gate lifetime with
-    * `spark.catalog.clearCache()` plus driver GC of the checkpoint RDDs. */
+    * materialized bytes live, never their values. Round loops enter
+    * through [[iterate]], which stages each round here and frees the
+    * superseded one; harnesses bound gate lifetime with
+    * `spark.catalog.clearCache()` plus [[releaseAll]]. */
   def stage(df: DataFrame, tag: String): DataFrame = {
     val mode = df.sparkSession.conf.getOption("spark.graft.scratch.mode")
       .orElse(sys.env.get("SPARK_GRAFT_SCRATCH")).getOrElse("local")
@@ -169,6 +170,38 @@ object Tables {
     * again — its lineage is truncated, so the blocks are the data. */
   def unstage(df: DataFrame): Unit =
     org.apache.spark.sql.graft.StagedStatsBridge.release(df)
+
+  /** The round loop of every iterative operator (the GraphX Pregel
+    * discipline): round i stages `step(prev, i)` through [[stage]] as
+    * `s"$tag-$i"`, then frees `prev` via [[unstage]] — a convergence loop
+    * holds two rounds of blocks, never all of them — then evaluates `done`
+    * on the staged round. `init` is released like any superseded round:
+    * a staged `init` is handed over (its blocks go once round 0 is
+    * staged), an unstaged view passes through untouched. Runs until
+    * `maxRounds` rounds or `done`; returns the last staged round (`init`
+    * when no round ran) and whether `done` fired. Spark actions: one
+    * [[stage]] per round plus whatever `done` runs. */
+  def iterate(init: DataFrame, maxRounds: Int, tag: String)(
+      step: (DataFrame, Int) => DataFrame,
+      done: DataFrame => Boolean = _ => false): (DataFrame, Boolean) = {
+    var cur = init
+    var finished = false
+    var i = 0
+    while (i < maxRounds && !finished) {
+      val next = stage(step(cur, i), s"$tag-$i")
+      unstage(cur)
+      cur = next
+      finished = done(cur)
+      i += 1
+    }
+    (cur, finished)
+  }
+
+  /** [[iterate]]'s `done` for rounds that carry the pre-round value of
+    * `c` as `__prev`: true once the staged round changed no row (one
+    * count over the staged rows, never a recompute of the round). */
+  def unchanged(c: String)(staged: DataFrame): Boolean =
+    staged.filter(col(c) =!= col("__prev")).count() == 0L
 
   /** Harness-side block release BETWEEN queries: `catalog.clearCache()`
     * frees InMemoryRelations but NOT localCheckpoint block storage — a

@@ -726,18 +726,18 @@ object Ann {
     * vanishingly rare, documented rather than patched.
     * Scale: per round, one self-join
     * on the edge list (shuffles on the node key), two vector joins
-    * against the norm-carrying corpus, one bounded top-k agg; edges
-    * materialize to scratch per round so the chain never re-executes.
+    * against the norm-carrying corpus, one bounded top-k agg; edges are
+    * staged per round ([[graft.Tables.iterate]]; storage per
+    * [[graft.Tables.stage]]) so the chain never re-executes.
     *
     * Returns (qid, rank, neighbor, sim) — rank 1..k by (sim desc,
     * id asc), sim rounded to 4 like [[bruteForceTopK]]. */
   def nnDescent(corpus: DataFrame, k: Int, rounds: Int): DataFrame = {
     import graft.functions.DoubleKeyExprs.{doubleDescKey, doubleFromDescKey}
     import graft.functions.Hashing
-    def mat(d: DataFrame, tag: String): DataFrame =
-      graft.Tables.stage(d, tag)
+    require(rounds >= 1, "rounds must be >= 1")
     val topk = graft.functions.TopKPairsAgg.topKPairs(k)
-    val cn = mat(corpus.select(col("id"), col("vec"),
+    val cn = graft.Tables.stage(corpus.select(col("id"), col("vec"),
       Vectors.norm2(col("vec")).as("__n")), "nnd-cn")
     val n = cn.count()
     def score(cand: DataFrame): DataFrame = cand
@@ -763,10 +763,10 @@ object Ann {
     val seed = darts.join(pos, Seq("__c"))
       .filter(col("v") =!= col("u"))
       .select(col("v"), col("u")).distinct()
-    var edges = mat(score(seed).select(col("v"), col("u")), "nnd-e0")
-    var staged = edges // staged frame behind the current edges view
-    var last: DataFrame = null
-    for (r <- 1 to rounds) {
+    val e0 = graft.Tables.stage(score(seed).select(col("v"), col("u")),
+      "nnd-e0")
+    val (last, _) = graft.Tables.iterate(e0, rounds, "nnd-e") { (prev, _) =>
+      val edges = prev.select(col("v"), col("u"))
       val rcap = edges.select(col("u").as("m"), col("v").as("x"))
         .groupBy(col("m")).agg(topk(col("x"), col("x")).as("__t"))
         .select(col("m"), explode(col("__t")).as("__e"))
@@ -778,10 +778,7 @@ object Ann {
         .select(col("v"), col("u"))
       val cand = edges.unionByName(lj)
         .filter(col("v") =!= col("u")).distinct()
-      last = mat(score(cand), s"nnd-e$r")
-      graft.Tables.unstage(staged) // superseded round (guide §5)
-      staged = last
-      edges = last.select(col("v"), col("u"))
+      score(cand)
     }
     last.select(col("v").as("qid"), col("rank"),
       col("u").as("neighbor"), round(col("__sim"), 4).as("sim"))

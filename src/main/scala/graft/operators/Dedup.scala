@@ -317,49 +317,39 @@ object Dedup {
   }
 
   /** [[dedupClusters]] run to CONVERGENCE: iterate min-label propagation
-    * until no label changes (or maxIters), materializing each round to
-    * scratch parquet so lineage stays one join deep — the production form
-    * for graphs whose diameter is unknown. Components of any width
-    * collapse fully.
+    * until no label changes (or maxIters), staging each round so lineage
+    * stays one join deep — the production form for graphs whose diameter
+    * is unknown. Components of any width collapse fully.
     *
-    * Each round is cut through [[graft.Tables.stage]]: `local` mode
-    * (default) is one localCheckpoint job per round; `parquet` mode is the
-    * RELIABLE-storage form for clusters where a lost executor past round 1
+    * Rounds run through [[graft.Tables.iterate]], so storage is per
+    * [[graft.Tables.stage]]: `local` mode (default) is one localCheckpoint
+    * job per round and NOT recoverable after executor loss; `parquet` mode
+    * is the durable form for clusters where a lost executor past round 1
     * must not kill the lineage (set `spark.graft.scratch.mode=parquet`).
     * Either way the round's cut doubles as the single materialization; the
     * convergence probe reads the staged rows back, so no round is ever
     * computed twice. */
   def dedupClustersConverged(ids: DataFrame, pairs: DataFrame,
       maxIters: Int = 50): DataFrame = {
-    def materialize(df: DataFrame, tag: String): DataFrame =
-      graft.Tables.stage(df, tag)
-    val edges = materialize(
+    val edges = graft.Tables.stage(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
       "graft-cluster-edges")
-    var labels = materialize(
+    val labels0 = graft.Tables.stage(
       ids.select(col("id"), col("id").as("label")), "graft-cluster-0")
-    var staged = labels // staged frame behind the current labels view
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
+    val (labels, _) = graft.Tables.iterate(labels0, maxIters,
+        "graft-cluster")({ (prev, _) =>
+      val labels = prev.select(col("id"), col("label"))
       val nbr = edges.join(labels, edges("src") === labels("id"))
         .groupBy(col("dst").as("__nid")).agg(min("label").as("__nl"))
       // carry the previous label THROUGH the update so convergence is read
-      // off the materialized round — one write job + one count-on-parquet
+      // off the staged round — one stage + one count over the staged rows
       // per iteration, never a recompute of the join.
-      val next = materialize(
-        labels.join(nbr, labels("id") === nbr("__nid"), "left")
-          .select(col("id"), col("label").as("__prev"),
-            least(col("label"), coalesce(col("__nl"), col("label")))
-              .as("label")),
-        s"graft-cluster-${it + 1}")
-      graft.Tables.unstage(staged) // superseded round (guide §5)
-      staged = next
-      changed = next.filter(col("label") =!= col("__prev")).count()
-      labels = next.select(col("id"), col("label"))
-      it += 1
-    }
+      labels.join(nbr, labels("id") === nbr("__nid"), "left")
+        .select(col("id"), col("label").as("__prev"),
+          least(col("label"), coalesce(col("__nl"), col("label")))
+            .as("label"))
+    }, graft.Tables.unchanged("label"))
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
@@ -401,8 +391,9 @@ object Dedup {
     * expected diameter; near-dup components are shallow in practice).
     *
     * Scale: per round one shuffle of edges joined to labels + one
-    * min-aggregate — the standard DataFrame connected-components loop. For
-    * many rounds, checkpoint labels every few iterations to cut lineage. */
+    * min-aggregate — the standard DataFrame connected-components loop;
+    * labels are staged per round ([[graft.Tables.iterate]]; storage per
+    * [[graft.Tables.stage]]). */
   def dedupClusters(ids: DataFrame, pairs: DataFrame,
       iters: Int): DataFrame = {
     // persist the edge list: every round references it, and without the
@@ -413,29 +404,22 @@ object Dedup {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .persist()
-    def materialize(df: DataFrame, tag: String): DataFrame =
-      graft.Tables.stage(df, tag)
     // each round reads `labels` TWICE (neighbor-min build + the update
     // join), so without a cut the label lineage doubles per round — after
     // r rounds the plan holds 2^r copies of the ids subtree and its
-    // shuffles. One tiny scratch write per round keeps every round's plan
-    // two joins deep (the [[dedupClustersConverged]] discipline; same
-    // exact semantics, the oracle still unrolls it).
-    var labels = materialize(
+    // shuffles. One tiny stage per round keeps every round's plan two
+    // joins deep (the [[dedupClustersConverged]] discipline; same exact
+    // semantics, the oracle still unrolls it).
+    val labels0 = graft.Tables.stage(
       ids.select(col("id"), col("id").as("label")), "graft-dc-0")
-    for (i <- 0 until iters) {
+    graft.Tables.iterate(labels0, iters, "graft-dc") { (labels, _) =>
       val nbr = edges.join(labels, edges("src") === labels("id"))
         .groupBy(col("dst").as("__nid")).agg(min("label").as("__nl"))
-      val old = labels
-      labels = materialize(
-        labels.join(nbr, labels("id") === nbr("__nid"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("__nl"), col("label")))
-              .as("label")),
-        s"graft-dc-${i + 1}")
-      graft.Tables.unstage(old) // superseded round (guide §5)
-    }
-    labels.select(col("id"), col("label").as("cluster_id"))
+      labels.join(nbr, labels("id") === nbr("__nid"), "left")
+        .select(col("id"),
+          least(col("label"), coalesce(col("__nl"), col("label")))
+            .as("label"))
+    }._1.select(col("id"), col("label").as("cluster_id"))
   }
 
   /** INCREMENTAL near-dup check — the production shape of corpus growth:

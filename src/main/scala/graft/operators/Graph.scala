@@ -3,15 +3,17 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Distributed graph analytics over an edge table — the link-graph half of
   * a web-scale training-data pipeline. Page quality at corpus scale is
   * usually a LINK signal (incoming links from high-rank hosts) fed into
   * the curation mix next to the text-quality scores (`Text`), so the
   * engine needs an iterative graph primitive that survives 100 TB:
-  * per-iteration joins on a co-partitioned edge table, reliable scratch
-  * materialization between rounds (the [[Hierarchy]]/[[Vocab]]/[[Dedup]]
-  * discipline — never executor-pinned cache), and NO driver-side state
-  * beyond the loop counter.
+  * per-iteration joins on a co-partitioned edge table, every round staged
+  * through [[graft.Tables.iterate]] (storage per [[graft.Tables.stage]]:
+  * executor blocks by default, durable parquet when configured), and NO
+  * driver-side state beyond the loop counter.
   *
   * Arithmetic is INTEGER CREDITS, not floating-point rank: summing
   * doubles is order-dependent under distributed aggregation, so two runs
@@ -22,9 +24,6 @@ import org.apache.spark.sql.functions._
   * on any partitioning and replayable in any engine with 64-bit integers.
   */
 object Graph {
-
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Tables.stage(df, tag)
 
   /** PageRank with integer credits. `edges`: (src: long, dst: long),
     * multi-edges and self-loops allowed. Every node starts with
@@ -37,42 +36,35 @@ object Graph {
     * Shape per iteration: one join credits⋈edges on src (both sides hash
     * on the node id, and the edge side's partitioning is reused across
     * all rounds), one aggregation by dst, one left join back to the node
-    * universe. Frontier state is materialized to scratch parquet each
-    * round, so a lost executor replays one round, not the whole loop. */
+    * universe. Credits are staged per round ([[graft.Tables.iterate]];
+    * storage per [[graft.Tables.stage]]). */
   def pageRankCredits(edges: DataFrame, iters: Int,
       initCredits: Long = 1000000L, teleport: Long = 150000L,
       dampNum: Int = 85, dampDen: Int = 100): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val e0 = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val nodes = materialize(
+    val nodes = Tables.stage(
       e0.select(col("src").as("id"))
         .union(e0.select(col("dst").as("id"))).distinct(),
       "graft-pr-nodes")
     // outdegree rides WITH each edge so the per-iteration join is a
     // single equi-join on src — no second join against a degree table
-    val e = materialize(
+    val e = Tables.stage(
       e0.join(e0.groupBy("src").agg(count(lit(1)).as("__d")), "src"),
       "graft-pr-edges")
-    var credits = nodes.select(col("id"), lit(initCredits).as("cr"))
-    var i = 0
-    while (i < iters) {
+    Tables.iterate(nodes.select(col("id"), lit(initCredits).as("cr")),
+        iters, "graft-pr") { (credits, _) =>
       val contrib = e.join(credits, e("src") === credits("id"))
         .select(col("dst"),
           // SQL `div`: exact integer quotient — floor(double-division)
           // could land one off when the true quotient sits on an integer
           expr(s"(cr * $dampNum) div (${dampDen}L * __d)").as("__c"))
         .groupBy("dst").agg(sum("__c").as("__in"))
-      val old = credits
-      credits = materialize(
-        nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-          .select(col("id"),
-            (lit(teleport) + coalesce(col("__in"), lit(0L))).as("cr")),
-        s"graft-pr-$i")
-      if (i > 0) graft.Tables.unstage(old) // superseded round (guide §5)
-      i += 1
-    }
-    credits
+      nodes.join(contrib, nodes("id") === contrib("dst"), "left")
+        .select(col("id"),
+          (lit(teleport) + coalesce(col("__in"), lit(0L))).as("cr"))
+    }._1
   }
 
   /** PERSONALIZED PageRank with integer credits — the literal TrustRank
@@ -85,7 +77,7 @@ object Graph {
     *
     * Identical shape and arithmetic to [[pageRankCredits]] — one
     * edge⋈credit equi-join, one dst aggregation, one node left-join per
-    * round, per-round scratch materialization — with the teleport term
+    * round, credits staged per round — with the teleport term
     * `when(isSeed, teleport, 0)`; seed membership is stamped on the node
     * universe once, so rounds add no extra join. Exact integer ops:
     * replayable hash-for-hash in any engine. */
@@ -97,7 +89,7 @@ object Graph {
       col("dst").cast("long").as("dst"))
     val s = seeds.select(col("id").cast("long").as("id")).distinct()
       .select(col("id"), lit(true).as("__seed"))
-    val nodes = materialize(
+    val nodes = Tables.stage(
       e0.select(col("src").as("id"))
         .union(e0.select(col("dst").as("id"))).distinct()
         .join(s, Seq("id"), "left")
@@ -105,28 +97,21 @@ object Graph {
           when(coalesce(col("__seed"), lit(false)), lit(teleport))
             .otherwise(lit(0L)).as("__t")),
       "graft-ppr-nodes")
-    val e = materialize(
+    val e = Tables.stage(
       e0.join(e0.groupBy("src").agg(count(lit(1)).as("__d")), "src"),
       "graft-ppr-edges")
     // start mass on the seeds only — the TrustRank initial vector
-    var credits = nodes.select(col("id"),
-      when(col("__t") > 0, lit(initCredits)).otherwise(lit(0L)).as("cr"))
-    var i = 0
-    while (i < iters) {
+    Tables.iterate(nodes.select(col("id"),
+        when(col("__t") > 0, lit(initCredits)).otherwise(lit(0L)).as("cr")),
+        iters, "graft-ppr") { (credits, _) =>
       val contrib = e.join(credits, e("src") === credits("id"))
         .select(col("dst"),
           expr(s"(cr * $dampNum) div (${dampDen}L * __d)").as("__c"))
         .groupBy("dst").agg(sum("__c").as("__in"))
-      val old = credits
-      credits = materialize(
-        nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-          .select(col("id"),
-            (col("__t") + coalesce(col("__in"), lit(0L))).as("cr")),
-        s"graft-ppr-$i")
-      if (i > 0) graft.Tables.unstage(old) // superseded round (guide §5)
-      i += 1
-    }
-    credits
+      nodes.join(contrib, nodes("id") === contrib("dst"), "left")
+        .select(col("id"),
+          (col("__t") + coalesce(col("__in"), lit(0L))).as("cr"))
+    }._1
   }
 
   /** Connected components over an UNDIRECTED graph (input edge list is
@@ -144,23 +129,22 @@ object Graph {
     *      diameter) rounds instead of the O(diameter) of plain label
     *      propagation (the classic trick; cf. large-star/small-star).
     * Convergence = a round changes no label (one count action per round);
-    * labels are materialized to scratch parquet per round — a lost
-    * executor replays one round, not the loop. Driver state: the loop
-    * counter and the change count. */
+    * labels are staged per round ([[graft.Tables.iterate]]; storage per
+    * [[graft.Tables.stage]]). Driver state: the loop counter and the
+    * change count. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 25): DataFrame = {
     val sym0 = edges.select(col("src").cast("long").as("u"),
       col("dst").cast("long").as("v"))
-    val und = materialize(
+    val und = Tables.stage(
       sym0.union(sym0.select(col("v").as("u"), col("u").as("v"))).distinct(),
       "graft-cc-und")
-    var labels = materialize(
+    val labels0 = Tables.stage(
       und.select(col("u").as("id")).distinct()
         .select(col("id"), col("id").as("comp")),
       "graft-cc-0")
-    var staged = labels // the staged frame behind the current labels view
-    var i = 0
-    var changed = 1L
-    while (i < maxIters && changed > 0L) {
+    val (labels, _) = Tables.iterate(labels0, maxIters, "graft-cc")({
+        (prev, _) =>
+      val labels = prev.select(col("id"), col("comp"))
       val nbrMin = und.join(labels, und("u") === labels("id"))
         .groupBy(und("v").as("id")).agg(min(col("comp")).as("__nm"))
       // carry the pre-round label through the materialized table so the
@@ -171,16 +155,10 @@ object Graph {
           least(col("comp"), coalesce(col("__nm"), col("comp"))).as("comp"))
       val parent = stepped.select(col("id").as("__pid"),
         col("comp").as("__pcomp"))
-      val doubled = stepped.join(parent, stepped("comp") === col("__pid"))
+      stepped.join(parent, stepped("comp") === col("__pid"))
         .select(col("id"), col("__pcomp").as("comp"), col("__prev"))
-      val next = materialize(doubled, s"graft-cc-${i + 1}")
-      graft.Tables.unstage(staged) // superseded round's blocks (guide §5)
-      staged = next
-      changed = next.filter(col("comp") =!= col("__prev")).count()
-      labels = next.select(col("id"), col("comp"))
-      i += 1
-    }
-    labels
+    }, Tables.unchanged("comp"))
+    labels.select(col("id"), col("comp"))
   }
 
   /** Synchronous label propagation (community detection) over an
@@ -196,8 +174,8 @@ object Graph {
     * values only travel along edges), one (node, label) count
     * aggregation, one argmax-by-node aggregation — the majority vote is
     * `max(struct(count, -label))`, a single partial-aggregating shuffle,
-    * never a per-node window. Labels materialize to scratch parquet per
-    * round (the [[Hierarchy]]/[[Vocab]] reliability discipline). Node ids
+    * never a per-node window. Labels are staged per round
+    * ([[graft.Tables.iterate]]; storage per [[graft.Tables.stage]]). Node ids
     * must be >= 0 (the negation trick needs -lab exact; ids here are
     * pmod-derived).
     *
@@ -206,30 +184,24 @@ object Graph {
     require(rounds >= 1, "rounds must be >= 1")
     val sym = edges.select(col("src").cast("long").as("u"),
       col("dst").cast("long").as("v"))
-    val und = materialize(
+    val und = Tables.stage(
       sym.union(sym.select(col("v").as("u"), col("u").as("v"))).distinct(),
       "graft-lpa-und")
-    var labels = materialize(
+    val labels0 = Tables.stage(
       und.select(col("u").as("id")).distinct()
         .select(col("id"), col("id").as("lab")),
       "graft-lpa-0")
-    var i = 0
-    while (i < rounds) {
+    Tables.iterate(labels0, rounds, "graft-lpa") { (labels, _) =>
       val votes = und.join(labels, und("u") === labels("id"))
         .groupBy(und("v").as("nid"), col("lab"))
         .agg(count(lit(1)).as("__c"))
       // every node of the symmetrized graph has >= 1 neighbor, so the
       // vote table covers the node universe — no left join back needed
-      val next = votes
+      votes
         .groupBy(col("nid").as("id"))
         .agg(max(struct(col("__c"), (-col("lab")).as("__nl"))).as("__m"))
         .select(col("id"), (-col("__m.__nl")).as("lab"))
-      val old = labels
-      labels = materialize(next, s"graft-lpa-${i + 1}")
-      graft.Tables.unstage(old) // superseded round's blocks (guide §5)
-      i += 1
-    }
-    labels
+    }._1
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) with integer credits over
@@ -245,17 +217,17 @@ object Graph {
     * Shape per round: authority update = one equi-join edges⋈hub on src +
     * one sum-agg by dst + one left join back to the node universe (nodes
     * with no in-edges score 0) + one global-max broadcast (1 row); hub
-    * update mirrors it across dst. Scores materialize to scratch parquet
-    * per half-round (the reliability discipline of [[pageRankCredits]]).
+    * update mirrors it across dst. Scores are staged per half-round
+    * (storage per [[graft.Tables.stage]]).
     * Returns (id, auth, hub) for every node. */
   def hitsCredits(edges: DataFrame, rounds: Int,
       scale: Long = 1000000L): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val de = materialize(
+    val de = Tables.stage(
       edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst")).distinct(),
       "graft-hits-e")
-    val nodes = materialize(
+    val nodes = Tables.stage(
       de.select(col("src").as("id"))
         .union(de.select(col("dst").as("id"))).distinct(),
       "graft-hits-n")
@@ -271,7 +243,7 @@ object Graph {
         .groupBy(de(groupOn).as("nid")).agg(sum(inCol).as("__s"))
       val raw = nodes.join(s, nodes("id") === col("nid"), "left")
         .select(nodes("id"), coalesce(col("__s"), lit(0L)).as(outCol))
-      materialize(rescale(raw, outCol), tag)
+      Tables.stage(rescale(raw, outCol), tag)
     }
     var hub = nodes.select(col("id"), lit(scale).as("hub"))
     var auth: DataFrame = null
@@ -279,9 +251,9 @@ object Graph {
     while (i < rounds) {
       val (oa, oh) = (auth, hub)
       auth = halfRound(hub, "hub", "src", "dst", "auth", s"graft-hits-a$i")
-      if (oa != null) graft.Tables.unstage(oa) // superseded (guide §5)
+      if (oa != null) Tables.unstage(oa) // superseded
       hub = halfRound(auth, "auth", "dst", "src", "hub", s"graft-hits-h$i")
-      if (i > 0) graft.Tables.unstage(oh)
+      if (i > 0) Tables.unstage(oh)
       i += 1
     }
     auth.join(hub, "id").select(col("id"), col("auth"), col("hub"))
@@ -299,33 +271,27 @@ object Graph {
     * universe with a left join if the unreached need a sentinel).
     *
     * Shape per round: one equi-join frontier⋈edges on the edge source +
-    * one min aggregation; state materializes to scratch parquet per
-    * round (the reliability discipline above). Monotone: once a node's
-    * min distance is found, later rounds can only confirm it, so a fixed
-    * horizon under-reaches but never mislabels. */
+    * one min aggregation; state is staged per round
+    * ([[graft.Tables.iterate]]; storage per [[graft.Tables.stage]]).
+    * Monotone: once a node's min distance is found, later rounds can only
+    * confirm it, so a fixed horizon under-reaches but never mislabels. */
   def seededDistance(edges: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val e = materialize(
+    val e = Tables.stage(
       edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v")).distinct(),
       "graft-dist-e")
-    var dist = materialize(
+    val dist0 = Tables.stage(
       seeds.select(col("id").cast("long").as("id"), lit(0L).as("dist"))
         .distinct(),
       "graft-dist-0")
-    var i = 0
-    while (i < maxHops) {
-      val next = e.join(dist, e("u") === dist("id"))
+    Tables.iterate(dist0, maxHops, "graft-dist") { (dist, _) =>
+      e.join(dist, e("u") === dist("id"))
         .select(e("v").as("id"), (col("dist") + 1L).as("dist"))
         .union(dist)
         .groupBy("id").agg(min("dist").as("dist"))
-      val old = dist
-      dist = materialize(next, s"graft-dist-${i + 1}")
-      graft.Tables.unstage(old) // superseded round (guide §5)
-      i += 1
-    }
-    dist
+    }._1
   }
 
   /** Bounded-round WEIGHTED single-source-set shortest distance
@@ -338,33 +304,27 @@ object Graph {
     * UNION ALL + MIN stages with no float drift. Parallel edges keep
     * their min weight. Shape per round: one edges⋈frontier equi-join on
     * the node id (the edge side's partitioning reused every round) +
-    * one min-agg; distances materialize to scratch per round, so a lost
-    * executor replays one round. Returns (id, dist) for reached nodes
-    * only. */
+    * one min-agg; distances are staged per round ([[graft.Tables.iterate]];
+    * storage per [[graft.Tables.stage]]). Returns (id, dist) for reached
+    * nodes only. */
   def weightedSeededDistance(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be >= 0")
-    val e = materialize(
+    val e = Tables.stage(
       edges.select(col("src").cast("long").as("u"),
           col("dst").cast("long").as("v"), col("w").cast("long").as("w"))
         .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")),
       "graft-wdist-e")
-    var dist = materialize(
+    val dist0 = Tables.stage(
       seeds.select(col("id").cast("long").as("id"), lit(0L).as("dist"))
         .distinct(),
       "graft-wdist-0")
-    var i = 0
-    while (i < rounds) {
-      val next = e.join(dist, e("u") === dist("id"))
+    Tables.iterate(dist0, rounds, "graft-wdist") { (dist, _) =>
+      e.join(dist, e("u") === dist("id"))
         .select(e("v").as("id"), (col("dist") + col("w")).as("dist"))
         .union(dist)
         .groupBy("id").agg(min("dist").as("dist"))
-      val old = dist
-      dist = materialize(next, s"graft-wdist-${i + 1}")
-      graft.Tables.unstage(old) // superseded round (guide §5)
-      i += 1
-    }
-    dist
+    }._1
   }
 
   /** Bounded-horizon DIRECTED strongly-connected components: node w
@@ -385,29 +345,25 @@ object Graph {
     * Shape: h rounds of frontier⋈edges expansion build the ≤h-hop
     * forward-reachability PAIR table (bounded by n·outdeg^h — at 100 TB
     * this is the term to budget: keep h small on high-fanout graphs, the
-    * same knob as g5's maxHops), each round materialized to scratch;
+    * same knob as g5's maxHops), each round staged ([[graft.Tables.iterate]]);
     * backward pairs are the transpose, so ONE closure table self-joins
     * (left_semi on the swapped key pair — never a second closure build)
     * and a groupBy(id).min picks the label. */
   def sccBounded(edges: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
-    val e = materialize(
+    val e = Tables.stage(
       edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v")).distinct(),
       "graft-scc-e")
-    var reach = materialize(
+    val reach0 = Tables.stage(
       e.select(col("u").as("id")).union(e.select(col("v").as("id")))
         .distinct().select(col("id"), col("id").as("w")),
       "graft-scc-0")
-    var i = 0
-    while (i < maxHops) {
-      val next = reach.join(e, reach("w") === e("u"))
+    val (reach, _) = Tables.iterate(reach0, maxHops, "graft-scc") {
+        (reach, _) =>
+      reach.join(e, reach("w") === e("u"))
         .select(reach("id"), e("v").as("w"))
         .union(reach).distinct()
-      val old = reach
-      reach = materialize(next, s"graft-scc-${i + 1}")
-      graft.Tables.unstage(old) // superseded round (guide §5)
-      i += 1
     }
     reach.as("a")
       .join(reach.as("b"),
@@ -428,32 +384,28 @@ object Graph {
     *
     * Shape per round: two semi-joins (edge endpoints against the
     * survivor set — both shuffle on the node id) + one count-agg; the
-    * survivor set materializes to scratch parquet per round. Total work
+    * survivor set is staged per round ([[graft.Tables.iterate]]). Total work
     * only shrinks round over round; no state beyond the survivor list. */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
     val sym = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    val und = materialize(
+    val und = Tables.stage(
       sym.union(sym.select(col("v").as("u"), col("u").as("v"))).distinct(),
       "graft-kcore-und")
-    var deg = und.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-    var prevAlive: DataFrame = null
-    var i = 0
-    while (i < rounds) {
-      val alive = materialize(
-        deg.filter(col("deg") >= k).select("id"), s"graft-kcore-$i")
-      // round i's materialize was the last read of round i-1's survivors
-      if (prevAlive != null) graft.Tables.unstage(prevAlive)
-      prevAlive = alive
-      deg = und
-        .join(alive.select(col("id").as("u")), "u")
-        .join(alive.select(col("id").as("v")), "v")
-        .groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-      i += 1
+    def degOf(alive: DataFrame): DataFrame = und
+      .join(alive.select(col("id").as("u")), "u")
+      .join(alive.select(col("id").as("v")), "v")
+      .groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
+    // round 0 peels the full graph's degrees; the state is the survivors
+    val deg0 = und.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
+    val (alive, _) = Tables.iterate(deg0, rounds, "graft-kcore") {
+        (prev, i) =>
+      (if (i == 0) prev else degOf(prev)).filter(col("deg") >= k)
+        .select("id")
     }
-    deg.filter(col("deg") >= k)
+    degOf(alive).filter(col("deg") >= k)
   }
 
   /** k-truss peeling over an UNDIRECTED simple graph (symmetrized,
@@ -471,46 +423,53 @@ object Graph {
     * join on the surviving edges (arboricity-bounded fan-out — the
     * orientation trick that keeps a power-law graph joinable), one
     * explode of each triangle to its 3 canonical edges, one count-agg,
-    * one filter. Survivors materialize to scratch per round; work only
-    * shrinks. Returns surviving canonical edges (u < v) with the support
-    * that justified their survival in the final round. */
+    * one filter. Survivors are staged per round ([[graft.Tables.iterate]];
+    * storage per [[graft.Tables.stage]]); work only shrinks. Returns
+    * surviving canonical edges (u < v) with the support that justified
+    * their survival in the final round. */
   def kTruss(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, "k must be >= 3 and rounds >= 1")
     val sym = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    var cur: DataFrame = materialize(
+    val und = Tables.stage(
       sym.select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v")).distinct(),
       "graft-ktruss-und")
-    var out: DataFrame = null
-    var i = 0
-    while (i < rounds) {
-      val sup = edgeSupport(cur, i)
-      val old = out
-      out = materialize(sup.filter(col("sup") >= k - 2),
-        s"graft-ktruss-r${i + 1}")
-      if (old != null) graft.Tables.unstage(old) // superseded (guide §5)
-      i += 1
-      cur = out.select("u", "v")
+    // a round's oriented edge table is staged (three consumers) and dead
+    // once the round's survivors are: the next round frees it
+    var oriented: DataFrame = null
+    val (out, _) = Tables.iterate(und, rounds, "graft-ktruss-r") {
+        (cur, i) =>
+      if (oriented != null) Tables.unstage(oriented)
+      oriented = orient(cur.select("u", "v"), i)
+      edgeSupport(oriented).filter(col("sup") >= k - 2)
     }
+    Tables.unstage(oriented)
     out
   }
 
-  /** Per-edge triangle support over canonical (u < v) simple edges, via
-    * the same degree-ordered wedge join as [[triangleCounts]]; edges in
-    * no triangle produce no row (support 0). */
-  private def edgeSupport(canon: DataFrame, round: Int): DataFrame = {
+  /** Canonical (u < v) simple edges directed from lower to higher
+    * (degree, id), each carrying its head's degree — the arboricity-bounded
+    * orientation [[edgeSupport]] joins over; staged for its three
+    * consumers. */
+  private def orient(canon: DataFrame, round: Int): DataFrame = {
     val und = canon.select(col("u").as("x"), col("v").as("y"))
       .union(canon.select(col("v").as("x"), col("u").as("y")))
     val deg = und.groupBy("x").agg(count(lit(1)).as("d"))
-    val oriented = materialize(
+    Tables.stage(
       und.join(deg, "x")
         .join(deg.select(col("x").as("y"), col("d").as("dy")), "y")
         .filter(col("d") < col("dy") ||
           (col("d") === col("dy") && col("x") < col("y")))
         .select(col("x").as("a"), col("y").as("b"), col("dy").as("db")),
       s"graft-ktruss-or$round")
+  }
+
+  /** Per-edge triangle support over an [[orient]]ed edge table, via the
+    * same degree-ordered wedge join as [[triangleCounts]]; edges in no
+    * triangle produce no row (support 0). */
+  private def edgeSupport(oriented: DataFrame): DataFrame = {
     val wedges = oriented.as("e1")
       .join(oriented.as("e2"), col("e1.a") === col("e2.a"))
       .filter(col("e1.db") < col("e2.db") ||
@@ -551,26 +510,27 @@ object Graph {
     * Shape per round: one distinct over the surviving edges' dst side,
     * two left-anti hash joins on the node id, one left-anti join
     * pruning peeled sources from the edge table; the peeled set and the
-    * surviving EDGES materialize to scratch per round (each is consumed
-    * twice downstream), while the alive-node set stays a lazy chain of
-    * anti-joins against the tiny materialized peel tables — one
+    * surviving EDGES are staged per round (storage per
+    * [[graft.Tables.stage]]; each is consumed twice downstream), while the
+    * alive-node set stays a lazy chain of anti-joins against the tiny
+    * staged peel tables — one
     * node-domain scan per round, no extra write. Total work only
     * SHRINKS round over round; no driver-side state beyond the loop
     * counter — the 100 TB posture of every peeling kernel here
     * ([[kCore]], [[kTruss]]). */
   def topoLayers(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    var cur = materialize(
+    var cur = Tables.stage(
       edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v")).distinct(),
       "graft-topo-e")
-    var alive = materialize(
+    var alive = Tables.stage(
       cur.select(col("u").as("id")).union(cur.select(col("v").as("id")))
         .distinct(), "graft-topo-nodes")
     var acc: DataFrame = null
     var i = 0
     while (i < rounds) {
-      val peel = materialize(
+      val peel = Tables.stage(
         alive.join(cur.select(col("v").as("id")).distinct(),
           Seq("id"), "left_anti"),
         s"graft-topo-p$i")
@@ -578,10 +538,10 @@ object Graph {
       acc = if (acc == null) layer else acc.union(layer)
       alive = alive.join(peel, Seq("id"), "left_anti")
       val oldCur = cur
-      cur = materialize(
+      cur = Tables.stage(
         cur.join(peel.select(col("id").as("u")), Seq("u"), "left_anti"),
         s"graft-topo-r$i")
-      graft.Tables.unstage(oldCur) // superseded round (guide §5)
+      Tables.unstage(oldCur) // superseded round
       i += 1
     }
     acc.union(alive.select(col("id"), lit(-1).as("layer")))
@@ -602,9 +562,10 @@ object Graph {
     * equi-join on src (the edge table re-read from its materialized
     * scan each round), one dst aggregation computing sum AND indeg
     * together, one left join back — [[pageRankCredits]]'s proven
-    * per-round plan with a feature payload; state materializes to
-    * scratch per round. Nodes with no in-edges keep their own value
-    * (coalesce 0 contribution). `feats`: (id, f) integer features;
+    * per-round plan with a feature payload; state is staged per round
+    * ([[graft.Tables.iterate]]; storage per [[graft.Tables.stage]]).
+    * Nodes with no in-edges keep their own value (coalesce 0
+    * contribution). `feats`: (id, f) integer features;
     * nodes absent from `feats` start at 0. The node domain is derived
     * from EDGE ENDPOINTS (advisor note, round 14): a row in `feats`
     * whose id touches no edge is not a graph node here and is absent
@@ -613,35 +574,28 @@ object Graph {
   def neighborAgg(edges: DataFrame, feats: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val e = materialize(
+    val e = Tables.stage(
       edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst")),
       "graft-nagg-e")
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    var h = materialize(
+    val h0 = Tables.stage(
       nodes.join(feats.select(col("id"), col("f")), Seq("id"), "left")
         .select(col("id"), coalesce(col("f"), lit(0L)).as("h0")),
       "graft-nagg-0")
-    var k = 1
-    while (k <= rounds) {
-      val prev = s"h${k - 1}"
+    Tables.iterate(h0, rounds, "graft-nagg") { (h, i) =>
+      val prev = s"h$i"
       val contrib = e.join(h.select(col("id").as("src"),
           col(prev).as("__c")), "src")
         .groupBy(col("dst"))
         .agg(sum(col("__c")).as("__in"), count(lit(1)).as("__d"))
-      val old = h
-      h = materialize(
-        h.join(contrib, h("id") === contrib("dst"), "left")
-          .drop("dst")
-          .withColumn(s"h$k",
-            col(prev) + coalesce(expr("__in div __d"), lit(0L)))
-          .drop("__in", "__d"),
-        s"graft-nagg-$k")
-      graft.Tables.unstage(old) // superseded round (guide §5)
-      k += 1
-    }
-    h
+      h.join(contrib, h("id") === contrib("dst"), "left")
+        .drop("dst")
+        .withColumn(s"h${i + 1}",
+          col(prev) + coalesce(expr("__in div __d"), lit(0L)))
+        .drop("__in", "__d")
+    }._1
   }
 
   /** LOCAL CLUSTERING COEFFICIENT per node — how close each node's
@@ -696,7 +650,7 @@ object Graph {
     val sym = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    val und = materialize(
+    val und = Tables.stage(
       sym.union(sym.select(col("v").as("u"), col("u").as("v"))).distinct(),
       "graft-mod-und")
     val uTot = und.agg(count(lit(1)).as("u_tot"))
@@ -776,7 +730,7 @@ object Graph {
     val sym = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    val und = materialize(
+    val und = Tables.stage(
       sym.union(sym.select(col("v").as("u"), col("u").as("v"))).distinct(),
       "graft-tri-und")
     val deg = und.groupBy("u").agg(count(lit(1)).as("d"))
@@ -784,7 +738,7 @@ object Graph {
     // row per {u,v}. The same order must drive the wedge pairing below,
     // or triangles whose two middle corners have inverted degree order
     // would look for a closing edge oriented the wrong way.
-    val oriented = materialize(
+    val oriented = Tables.stage(
       und.join(deg, "u")
         .join(deg.select(col("u").as("v"), col("d").as("dv")), "v")
         .filter(col("d") < col("dv") ||
@@ -832,7 +786,7 @@ object Graph {
         col("dst").cast("long").as("n"))
       .filter(col("c") =!= col("n"))
     // undirected neighbor relation, deduped: one row per (node, neigh)
-    val sym = materialize(
+    val sym = Tables.stage(
       sym0.union(sym0.select(col("n").as("c"), col("c").as("n"))).distinct(),
       "graft-cn-sym")
     val deg = sym.groupBy(col("c")).agg(count(lit(1)).as("d"))
@@ -872,8 +826,8 @@ object Graph {
     * (s, t) with d(s,t) > maxHops contribute nothing — nodes AT the
     * horizon carry δ = 0/1, so dependencies never flow from beyond it.
     * Pivots absent from the graph contribute nothing. Scale shape: all
-    * joins are hash equi-joins on (s, node); per-level state
-    * materializes to scratch ([[pageRankCredits]] discipline); the
+    * joins are hash equi-joins on (s, node); per-level state is staged
+    * (storage per [[graft.Tables.stage]]); the
     * driver holds only the literal pivot list. Overflow envelope: the
     * LOWEST-TERMS numerators/denominators must fit int64 (the
     * fraction-fold itself is BigInteger-exact and fails loudly past
@@ -887,7 +841,7 @@ object Graph {
     val sym = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    val und = materialize(
+    val und = Tables.stage(
       sym.union(sym.select(col("v").as("u"), col("u").as("v"))).distinct(),
       "graft-btw-und")
     import sp.implicits._
@@ -895,7 +849,7 @@ object Graph {
     // every dependency through duplicate BFS roots)
     val p0 = pivots.distinct.toDF("s")
       .join(und.select(col("u").as("s")).distinct(), Seq("s"), "left_semi")
-    var visited = materialize(
+    var visited = Tables.stage(
       p0.select(col("s"), col("s").as("v"), lit(0).as("dist"),
         lit(1L).as("sigma")),
       "graft-btw-v0")
@@ -910,14 +864,14 @@ object Graph {
         .select(col("s"), col("w").as("v"), lit(l).as("dist"),
           col("sigma"))
       val (ov, of) = (visited, frontier)
-      frontier = materialize(nxt, s"graft-btw-f$l")
-      visited = materialize(visited.unionByName(frontier),
+      frontier = Tables.stage(nxt, s"graft-btw-f$l")
+      visited = Tables.stage(visited.unionByName(frontier),
         s"graft-btw-v$l")
-      graft.Tables.unstage(ov) // superseded (guide §5); of == ov at l=1
-      if (l > 1) graft.Tables.unstage(of)
+      Tables.unstage(ov) // superseded; of == ov at l=1
+      if (l > 1) Tables.unstage(of)
       l += 1
     }
-    val dag = materialize(
+    val dag = Tables.stage(
       visited.join(und, visited("v") === und("u"))
         .select(visited("s"), visited("v"), visited("dist"),
           visited("sigma").as("sv"), und("v").as("w"))
@@ -927,12 +881,14 @@ object Graph {
         .select(col("s"), col("v"), col("dist"), col("sv"), col("w"),
           col("sw")),
       "graft-btw-dag")
-    var delta = materialize(
+    val delta0 = Tables.stage(
       visited.filter(col("dist") === maxHops)
         .select(col("s"), col("v"), lit(0L).as("n"), lit(1L).as("d")),
       "graft-btw-dh")
-    l = maxHops - 1
-    while (l >= 1) {
+    // levels maxHops−1 down to 1
+    val (delta, _) = Tables.iterate(delta0, maxHops - 1, "graft-btw-d") {
+        (delta, j) =>
+      val l = maxHops - 1 - j
       val lvl = dag.filter(col("dist") === l)
         .join(delta.select(col("s"), col("v").as("w"), col("n"),
           col("d")), Seq("s", "w"))
@@ -949,11 +905,7 @@ object Graph {
       val zeros = visited.filter(col("dist") === l)
         .join(lvl.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
         .select(col("s"), col("v"), lit(0L).as("n"), lit(1L).as("d"))
-      val od = delta
-      delta = materialize(delta.unionByName(lvl).unionByName(zeros),
-        s"graft-btw-d$l")
-      graft.Tables.unstage(od) // superseded (guide §5)
-      l -= 1
+      delta.unionByName(lvl).unionByName(zeros)
     }
     delta.groupBy(col("v").as("id"))
       .agg(collect_list(struct(col("n"), col("d"))).as("__cs"))
@@ -977,7 +929,7 @@ object Graph {
     *
     * Scale shape: the g20 multi-source BFS — frontier (pivot, node)
     * rows through one edge equi-join + min-dedup anti-join per level,
-    * state ≤ |pivots|·n materialized per round — then ONE node-domain
+    * state ≤ |pivots|·n staged per round — then ONE node-domain
     * agg and a left join onto the node universe. Pivot count is the
     * estimator's accuracy/cost knob, horizon its locality knob. */
   def harmonicPivots(edges: DataFrame, pivots: Seq[Long], maxHops: Int)
@@ -988,7 +940,7 @@ object Graph {
     val sym = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    val und = materialize(
+    val und = Tables.stage(
       sym.union(sym.select(col("v").as("u"), col("u").as("v"))).distinct(),
       "graft-harm-und")
     import sp.implicits._
@@ -996,7 +948,7 @@ object Graph {
     // through left_semi twice and double-count every reciprocal
     val p0 = pivots.distinct.toDF("s")
       .join(und.select(col("u").as("s")).distinct(), Seq("s"), "left_semi")
-    var visited = materialize(
+    var visited = Tables.stage(
       p0.select(col("s"), col("s").as("v"), lit(0).as("dist")),
       "graft-harm-v0")
     var frontier = visited
@@ -1008,11 +960,11 @@ object Graph {
           "left_anti")
         .select(col("s"), col("w").as("v"), lit(l).as("dist"))
       val (ov, of) = (visited, frontier)
-      frontier = materialize(nxt, s"graft-harm-f$l")
-      visited = materialize(visited.unionByName(frontier),
+      frontier = Tables.stage(nxt, s"graft-harm-f$l")
+      visited = Tables.stage(visited.unionByName(frontier),
         s"graft-harm-v$l")
-      graft.Tables.unstage(ov) // superseded (guide §5); of == ov at l=1
-      if (l > 1) graft.Tables.unstage(of)
+      Tables.unstage(ov) // superseded; of == ov at l=1
+      if (l > 1) Tables.unstage(of)
       l += 1
     }
     def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
@@ -1076,9 +1028,10 @@ object Graph {
     * equi-joins to attach deg/own-label, one sigma equi-join on the
     * community key (community-domain sized — NOT broadcast: round 0's
     * community domain is the node domain), the argmax agg, and the g11
-    * intra/deg-mass aggs for the guard. Labels materialize to scratch
-    * per round; driver-side state is the loop counter plus two 1-row
-    * collects per round (q_num and the move count — config-sized).
+    * intra/deg-mass aggs for the guard. Labels are staged per round
+    * (storage per [[graft.Tables.stage]]); driver-side state is the loop
+    * counter plus two 1-row collects per round (q_num and the move
+    * count — config-sized).
     * Overflow envelope (documented, same family as g11): deg·Σtot and
     * intra2·u_tot must stay under 2⁶³ — safe through u_tot ≈ 3·10⁹
     * directed half-edges; beyond that the same scores ride DECIMAL(38).
@@ -1170,7 +1123,7 @@ object Graph {
     val sym = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    val und = materialize(
+    val und = Tables.stage(
       sym.union(sym.select(col("v").as("u"), col("u").as("v")))
         .distinct().withColumn("w", lit(1L)),
       "graft-louv2-und")
@@ -1180,7 +1133,7 @@ object Graph {
     // contract: one (cu, cv) edge per ordered community pair, weight =
     // count of underlying directed edges (symmetric because und is);
     // cu = cv rows land ONCE per community = the intra2_c self-loop
-    val coarse = materialize(
+    val coarse = Tables.stage(
       und.join(lab1.select(col("id").as("u"), col("lab").as("__cu")),
           Seq("u"))
         .join(lab1.select(col("id").as("v"), col("lab").as("__cv")),
@@ -1195,7 +1148,7 @@ object Graph {
       "graft-louv2-l2", stageUnd = false)
     // map back; isolated level-1 communities keep their own label
     val l2m = lab2.select(col("id").as("__id2"), col("lab").as("__c2"))
-    val mapped = materialize(
+    val mapped = Tables.stage(
       lab1.join(l2m, lab1("lab") === l2m("__id2"), "left")
         .select(lab1("id"),
           coalesce(col("__c2"), lab1("lab")).as("lab")),
@@ -1219,11 +1172,11 @@ object Graph {
       .crossJoin(uTot)
       .select((col("__i2") * col("__t") - col("__dd")).as("q"))
       .collect()(0).getLong(0)
-    graft.Tables.unstage(coarse) // only the ascent read it (guide §5)
+    Tables.unstage(coarse) // only the ascent read it
     if (q2 >= q1) LouvainTwoLevel(mapped, log1, log2,
       coarseAccepted = true, q2)
     else {
-      graft.Tables.unstage(mapped) // rejected — never read again
+      Tables.unstage(mapped) // rejected — never read again
       LouvainTwoLevel(lab1, log1, log2, coarseAccepted = false, q1)
     }
   }
@@ -1283,7 +1236,7 @@ object Graph {
     val sym = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    val und = materialize(
+    val und = Tables.stage(
       sym.union(sym.select(col("v").as("u"), col("u").as("v")))
         .distinct().withColumn("w", lit(1L)),
       "graft-louvm-und")
@@ -1305,7 +1258,7 @@ object Graph {
     var levelsRun = 1
     while (lvl <= levels && !stopped) {
       levelsRun = lvl
-      val coarse = materialize(
+      val coarse = Tables.stage(
         und.join(mapping.select(col("id").as("u"), col("lab").as("__cu")),
             Seq("u"))
           .join(mapping.select(col("id").as("v"), col("lab").as("__cv")),
@@ -1316,7 +1269,7 @@ object Graph {
       val (labK, _) = louvainAscentImpl(coarse, cr, classes,
         s"graft-louvm-l$lvl", stageUnd = false)
       val l2m = labK.select(col("id").as("__id2"), col("lab").as("__c2"))
-      val mapped = materialize(
+      val mapped = Tables.stage(
         mapping.join(l2m, mapping("lab") === l2m("__id2"), "left")
           .select(mapping("id"),
             coalesce(col("__c2"), mapping("lab")).as("lab")),
@@ -1356,11 +1309,11 @@ object Graph {
       // level-local staged frames are dead once the guard resolved:
       // coarse fed only the ascent, and the loser of mapping-vs-mapped
       // is never read again (guide §5)
-      graft.Tables.unstage(coarse)
+      Tables.unstage(coarse)
       if (accepted) {
         val old = mapping; mapping = mapped; q = qK
-        graft.Tables.unstage(old)
-      } else graft.Tables.unstage(mapped)
+        Tables.unstage(old)
+      } else Tables.unstage(mapped)
       pins += LouvainLevelPin(lvl, q, accepted, nChanged, nComms)
       if (!accepted || nChanged == 0L) { stopped = true; stopAcc = accepted }
       lvl += 1
@@ -1395,12 +1348,12 @@ object Graph {
     // level pass the staged und/coarse straight in) skip the redundant
     // re-materialization — it cost two jobs and a duplicate cache copy
     // per ascent call (r17, guide §1.2 step 1)
-    val und = if (stageUnd) materialize(und0, s"$tag-und") else und0
+    val und = if (stageUnd) Tables.stage(und0, s"$tag-und") else und0
     val undExt = und.filter(col("u") =!= col("v")) // e2's edge universe
-    val deg = materialize(
+    val deg = Tables.stage(
       und.groupBy(col("u").as("id")).agg(sum(col("w")).as("degree")),
       s"$tag-deg")
-    var labels = materialize(
+    var labels = Tables.stage(
       deg.select(col("id"), col("id").as("lab")), s"$tag-0")
     // ONE setup collect (r17 — uTot and q0 were two): total directed
     // weight 2W and the singleton-start q0 = selfΣ·u_tot − Σ deg²
@@ -1446,7 +1399,7 @@ object Graph {
           (col("__e2") * lit(uTot) - col("degree") *
             (col("__sig") - when(col("__cl") === col("lab"),
               col("degree")).otherwise(lit(0L)))).as("__sc"))
-      val prop = materialize(
+      val prop = Tables.stage(
         scored.groupBy(col("id"))
           .agg(max(struct(col("__sc"), (-col("__cl")).as("__nl")))
             .as("__m"), max(col("lab")).as("__ol")) // lab constant per id
@@ -1485,8 +1438,8 @@ object Graph {
       // long ascent holds two rounds of blocks, not all of them
       if (accepted) {
         val old = labels; labels = prop; q = qProp
-        graft.Tables.unstage(old)
-      } else graft.Tables.unstage(prop)
+        Tables.unstage(old)
+      } else Tables.unstage(prop)
       log += LouvainRound(i, q, accepted, nMoved)
       i += 1
     }
@@ -1503,35 +1456,34 @@ object Graph {
     * against the current h table (shuffles on the node key), the
     * h-index under a window PARTITIONED by node (degree-bounded — the
     * h-index depends only on the sorted multiset, so the tie order
-    * inside the window is unobservable), one agg; h materialized to
-    * scratch per round with a fused 1-row changed-count collect (the
-    * g19 discipline). Early-stop on changed = 0 is provably a no-op
-    * tail (the iteration is a deterministic fixed point), so a
-    * fixed-round oracle replay computes the identical table.
+    * inside the window is unobservable), one agg; h staged per round
+    * ([[graft.Tables.iterate]]) carrying the previous h, so the
+    * changed count is one count over the staged rows. Early-stop on
+    * changed = 0 is provably a no-op tail (the iteration is a
+    * deterministic fixed point), so a fixed-round oracle replay computes
+    * the identical table.
     *
     * Edges are symmetrized+deduped. Isolated targets (in-edges only
     * in the directed input) participate through the symmetric form.
     * Returns (id, degree, coreness, converged) — `converged` TRUE iff
     * some round changed nothing (global, same value on every row). */
   def coreness(edges: DataFrame, rounds: Int): DataFrame = {
-    val und = materialize(
+    val und = Tables.stage(
       edges.select(col("src"), col("dst"))
         .unionByName(edges.select(col("dst").as("src"),
           col("src").as("dst")))
         .filter(col("src") =!= col("dst")).distinct(), "cor-und")
     val deg = und.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("h"))
-    var h = materialize(deg, "cor-h0")
-    var hStaged = h // staged frame behind the current h view
-    var converged = false
-    var r = 1
-    while (r <= rounds && !converged) {
+    val (h, converged) = Tables.iterate(Tables.stage(deg, "cor-h0"),
+        rounds, "cor-h")({ (prev, _) =>
+      val h = prev.select(col("id"), col("h"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("v")).orderBy(col("nh").desc, col("u"))
       // the previous h rides INTO the staged frame (r17): the changed
-      // count is then a 1-row agg over the cache — the former
+      // count is then one count over the staged rows — the former
       // nh⋈h guard join (one broadcast + exchange per round) is gone
-      val next = und
+      und
         .select(col("src").as("v"), col("dst").as("u"))
         .join(h.select(col("id").as("u"), col("h").as("nh")), Seq("u"))
         .withColumn("__rk", row_number().over(w).cast("long"))
@@ -1539,18 +1491,10 @@ object Graph {
         .agg(coalesce(max(when(col("nh") >= col("__rk"), col("__rk"))),
           lit(0L)).as("h"))
         .select(col("v").as("id"), col("h"))
-        .join(h.select(col("id"), col("h").as("__ph")), Seq("id"))
-      val nh = materialize(next, s"cor-h$r")
-      graft.Tables.unstage(hStaged) // superseded round (guide §5)
-      hStaged = nh
-      val changed = nh.filter(col("h") =!= col("__ph"))
-        .agg(count(lit(1)).as("c")).collect()(0).getLong(0)
-      h = nh.select(col("id"), col("h"))
-      converged = changed == 0
-      r += 1
-    }
+        .join(h.select(col("id"), col("h").as("__prev")), Seq("id"))
+    }, Tables.unchanged("h"))
     deg.withColumnRenamed("h", "degree")
-      .join(h, Seq("id"))
+      .join(h.select(col("id"), col("h")), Seq("id"))
       .select(col("id"), col("degree"), col("h").as("coreness"),
         lit(converged).as("converged"))
   }
@@ -1575,12 +1519,12 @@ object Graph {
     * in the synthetic link graph's sink nodes). Per-step state is one
     * equi-join on the current node + one on (node, rank) — shuffles on
     * the node key only; state is |nodes|·walksPerNode rows per step,
-    * materialized to scratch each hop so the step chain never
-    * re-executes (the g19 per-round discipline). */
+    * staged each hop (storage per [[graft.Tables.stage]]) so the step
+    * chain never re-executes. */
   def deepWalks(edges: DataFrame, walksPerNode: Int, steps: Int)
       : DataFrame = {
     import graft.functions.Hashing
-    val adj0 = materialize(
+    val adj0 = Tables.stage(
       edges.select(col("src"), col("dst")).distinct(), "dw-adj")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("dst"))
@@ -1600,7 +1544,7 @@ object Graph {
       state.select(col("root"), col("wk"), lit(0L).as("step"),
         col("node")))
     for (i <- 1 to steps) {
-      state = materialize(state
+      state = Tables.stage(state
         .join(deg.select(col("src").as("__ds"), col("deg")),
           col("node") === col("__ds"))
         .withColumn("__r", pmod(Hashing.portableHash32(

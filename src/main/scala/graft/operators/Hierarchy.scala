@@ -13,17 +13,13 @@ import org.apache.spark.sql.functions._
   * on undirected similarity graphs. For deep or unknown-depth trees use
   * [[flattenDoubling]], which finishes in O(log depth) passes.
   *
-  * Every pass MATERIALIZES its frontier and its newly-resolved rows to
-  * scratch parquet: each level is computed exactly once (a lazy
-  * formulation re-evaluates level k's join once per later level), the
-  * lineage stays one-join deep, and the materialization is reliable
-  * storage, not executor-pinned cache — the same discipline as
-  * [[Dedup]]'s clustering loop and the Vocab builder.
+  * Every pass STAGES its frontier and its newly-resolved rows through
+  * [[graft.Tables.stage]]: each level is computed exactly once (a lazy
+  * formulation re-evaluates level k's join once per later level) and the
+  * lineage stays one-join deep — the same discipline as [[Dedup]]'s
+  * clustering loop and the Vocab builder.
   */
 object Hierarchy {
-
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Tables.stage(df, tag)
 
   /** `edges`: (node, parent) — one row per non-root node; roots have no
     * row. Returns (node, root, depth) for EVERY node appearing in `nodes`
@@ -42,7 +38,7 @@ object Hierarchy {
     while (remaining > 0 && depth < maxDepth) {
       // one join per level: nodes whose current ancestor has a parent
       // climb; the rest are resolved and leave the frontier
-      val joined = materialize(
+      val joined = graft.Tables.stage(
         state.join(e, state("root") === e("__en"), "left")
           .select(col("node"),
             coalesce(col("__ep"), col("root")).as("root"),
@@ -70,7 +66,7 @@ object Hierarchy {
   def flattenDoubling(nodes: DataFrame, edges: DataFrame,
       maxPasses: Int = 20): DataFrame = {
     // jump(n) = (anc, d): the highest KNOWN ancestor and its distance
-    var jump = materialize(
+    val jump0 = graft.Tables.stage(
       nodes.select(col("node"))
         .join(edges.select(col("node"), col("parent")), Seq("node"), "left")
         .select(col("node"),
@@ -78,14 +74,13 @@ object Hierarchy {
           when(col("parent").isNull, 0).otherwise(1).as("depth"),
           col("parent").isNull.as("done")),
       "graft-hier2-0")
-    var pass = 0
-    var unresolved = jump.filter(!col("done")).limit(1).count()
-    while (unresolved > 0 && pass < maxPasses) {
-      val j2 = jump.select(col("node").as("__n2"), col("anc").as("__a2"),
-        col("depth").as("__d2"), col("done").as("__done2"))
-      pass += 1
-      val old = jump
-      jump = materialize(
+    def resolved(jump: DataFrame): Boolean =
+      jump.filter(!col("done")).limit(1).count() == 0L
+    val jump = if (resolved(jump0)) jump0
+      else graft.Tables.iterate(jump0, maxPasses, "graft-hier2")({
+          (jump, _) =>
+        val j2 = jump.select(col("node").as("__n2"), col("anc").as("__a2"),
+          col("depth").as("__d2"), col("done").as("__done2"))
         jump.join(j2, jump("anc") === j2("__n2"), "left")
           .select(col("node"),
             when(col("done") || col("__a2").isNull, col("anc"))
@@ -93,11 +88,8 @@ object Hierarchy {
             when(col("done") || col("__a2").isNull, col("depth"))
               .otherwise(col("depth") + col("__d2")).as("depth"),
             (col("done") || col("__a2").isNull || col("__done2"))
-              .as("done")),
-        s"graft-hier2-$pass")
-      graft.Tables.unstage(old) // superseded pass (guide §5)
-      unresolved = jump.filter(!col("done")).limit(1).count()
-    }
+              .as("done"))
+      }, resolved)._1
     jump.select(col("node"), col("anc").as("root"), col("depth"))
   }
 }

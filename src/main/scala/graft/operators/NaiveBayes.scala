@@ -44,9 +44,6 @@ object NaiveBayes {
     * — class-domain sized, broadcastable. */
   final case class NbModel(cond: DataFrame, cls: DataFrame)
 
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Tables.stage(df, tag)
-
   /** (x, l) for every distinct positive x in `xs` (single column `x`,
     * 1 ≤ x < 2⁶³): l = p·2¹⁶ + frac where p = floor(log2 x) comes from
     * the binary-string length (no float anywhere) and frac's 16 bits
@@ -108,7 +105,7 @@ object NaiveBayes {
     * keep the default. Same rows either way. */
   def train(docs: DataFrame, labelCol: String, textCol: String,
       tag: String = "graft-nb", stageModel: Boolean = true): NbModel = {
-    val cnt = materialize(
+    val cnt = graft.Tables.stage(
       docs.select(col(labelCol).as("cls"),
           explode(graft.functions.Text.tokens(col(textCol))).as("tok"))
         .groupBy(col("cls"), col("tok")).agg(count(lit(1)).as("n")),
@@ -135,7 +132,7 @@ object NaiveBayes {
       .union(cnt.sparkSession.range(1).select(lit(dTot).as("x")))
       .union(cnt.sparkSession.range(1).select(lit(v).as("x")))
       .filter(col("x") >= 1)
-    val ltab = materialize(logTable(need), s"$tag-ltab")
+    val ltab = graft.Tables.stage(logTable(need), s"$tag-ltab")
     val cond = cnt
       .join(ltab, cnt("n") + 1 === ltab("x"))
       .select(col("cls"), col("tok"), col("l").as("lcond"))
@@ -155,8 +152,8 @@ object NaiveBayes {
       .crossJoin(broadcast(lD))
       .select(col("cls"), (col("__lp") - col("__ld")).as("lprior"),
         col("__ln").as("ldenom"))
-    if (stageModel) NbModel(materialize(cond, s"$tag-cond"),
-      materialize(cls, s"$tag-cls"))
+    if (stageModel) NbModel(graft.Tables.stage(cond, s"$tag-cond"),
+      graft.Tables.stage(cls, s"$tag-cls"))
     else NbModel(cond, cls)
   }
 

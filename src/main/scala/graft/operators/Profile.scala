@@ -201,9 +201,7 @@ object Profile {
     * (≥ −|cells| quantization ulps); portability needs no sign,
     * both engines compute identical integers. */
   def mutualInfo(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    def mat(d: DataFrame, tag: String): DataFrame =
-      graft.Tables.stage(d, tag)
-    val cells = mat(df
+    val cells = graft.Tables.stage(df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("x_val"), col(yCol).as("y_val"))
       .agg(count(lit(1)).as("n_xy")), "mi-cells")
@@ -221,7 +219,7 @@ object Profile {
       .union(m.select(col("n_x").as("x")))
       .union(m.select(col("n_y").as("x")))
       .union(m.select(col("__n").as("x")))
-    val ltab = mat(NaiveBayes.logTable(need), "mi-ltab")
+    val ltab = graft.Tables.stage(NaiveBayes.logTable(need), "mi-ltab")
     def l(of: String, as: String) =
       ltab.select(col("x").as(of), col("l").as(as))
     val terms = m

@@ -33,9 +33,6 @@ import org.apache.spark.sql.functions._
   * Returns one row per skyline (x, y): multiplicity + min-id witness. */
 object Skyline {
 
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Tables.stage(df, tag)
-
   /** Skyline of `df` MINIMIZING `x` and MAXIMIZING `y` (both cast to
     * long): (x, y, n_rows, witness = min id). Empty input → empty. */
   def skyline2d(df: DataFrame, id: Column, x: Column, y: Column,
@@ -132,7 +129,7 @@ object Skyline {
       val live = cells.withColumn("__mp", max(col("cy")).over(wc))
         .filter(col("__mp").isNull || col("__mp") <= col("cy"))
         .select(col("cx"), col("cy"))
-      val cand = materialize(
+      val cand = graft.Tables.stage(
         withCells.join(broadcast(live), Seq("cx", "cy"))
           .select(col("id"), col("x"), col("y")),
         s"graft-skyb-$depth")

@@ -3252,17 +3252,15 @@ object ExtensionQueries {
     * Input is the corpus plus a re-crawl twin of every doc (same text,
     * id+1e6, mirror-host URL — so the URL stage catches SAME-SITE
     * variant collisions and the content stage catches the cross-host
-    * re-crawls the URL key cannot see). Every stage output is
-    * materialized to scratch parquet — each is consumed twice (by the
-    * next stage and by the attrition count), and at 100 TB a stage
-    * boundary is exactly where you want a durable cut (retry scope, AQE
-    * stats, no lineage re-execution). Stage survivor counts ride the
+    * re-crawls the URL key cannot see). Every stage output is staged
+    * (storage per [[graft.Tables.stage]]) — each is consumed twice (by
+    * the next stage and by the attrition count), and a stage boundary is
+    * where the cut belongs (AQE stats, no lineage re-execution; a durable
+    * retry scope in `parquet` mode). Stage survivor counts ride the
     * output as constant columns (t30-style attrition audit), so the
     * oracle hash pins not just the final packed set but how many rows
     * every stage let through. */
   def t41CorpusPipeline(sp: SparkSession, dir: String): DataFrame = {
-    def mat(df: DataFrame, tag: String): DataFrame =
-      graft.Tables.stage(df, tag)
     val base = documents(sp, dir)
       .select(col("doc_id"), col("source"), col("lang"), col("text"))
     val corpus = base.union(base.select((col("doc_id") + 1000000L)
@@ -3271,7 +3269,7 @@ object ExtensionQueries {
       col("text"), Text.tokenCount(col("text")).as("n_tok"),
       Text.qualityScore(col("text")).as("quality"))
     // stage 1 — per-language quality floor (drop each lang's bottom decile)
-    val s1 = mat(graft.operators.Sampling.stratifiedQuantileFilter(
+    val s1 = stage(graft.operators.Sampling.stratifiedQuantileFilter(
       d0, col("lang"), col("quality"), minPercentile = 0.10), "graft-t41-s1")
     // stage 2 — canonicalize the crawl URL, keep each page's min-id variant
     // (groupBy + semi-join, not a window: the keeper election is a
@@ -3288,22 +3286,22 @@ object ExtensionQueries {
     val withUrl = s1.withColumn("canonical_url", Text.urlCanonicalize(url))
     val reps = withUrl.groupBy(col("canonical_url"))
       .agg(min(col("doc_id")).as("doc_id"))
-    val s2 = mat(withUrl.join(reps, Seq("canonical_url", "doc_id"),
+    val s2 = stage(withUrl.join(reps, Seq("canonical_url", "doc_id"),
       "left_semi").drop("canonical_url"), "graft-t41-s2")
     // stage 3 — MinHash-LSH near-dup dedup of the surviving content
     val surv = Dedup.nearDupSurvivors(s2, col("doc_id"), col("text"),
       n = 3, k = K, rows = BandRows, threshold = 0.8,
       maxBucket = PipeMaxBucket)
-    val s3 = mat(s2.join(surv.filter(col("is_survivor"))
+    val s3 = stage(s2.join(surv.filter(col("is_survivor"))
         .select(col("id").as("doc_id")), Seq("doc_id"), "left_semi")
       .drop("text"), "graft-t41-s3")
     // stage 4 — cap any single source at 12 docs (bounded TopKPairsAgg)
     val q4 = graft.operators.Sampling.domainQuota(
       s3, col("source"), col("doc_id"), k = 12)
-    val s4 = mat(s3.join(q4.select(col("key").as("doc_id")),
+    val s4 = stage(s3.join(q4.select(col("key").as("doc_id")),
       Seq("doc_id"), "left_semi"), "graft-t41-s4")
     // stage 5 — rebalance to ~600 tokens per source (hash threshold)
-    val s5 = mat(graft.operators.Sampling.tokenBudgetMix(s4, col("source"),
+    val s5 = stage(graft.operators.Sampling.tokenBudgetMix(s4, col("source"),
       col("doc_id").cast("string"), col("n_tok"), budget = 600L),
       "graft-t41-s5")
     // stage 6 — FFD-pack the survivors into 256-token bins, 4 shards
@@ -3529,8 +3527,8 @@ object ExtensionQueries {
     * and oracle (8408 = ⌊(1/2)^(1/4)·10⁴⌋ — no transcendental crosses
     * an engine). The volume column is the precision-side cost the
     * recall buys. The gate runs the PRODUCTION sweep shape: ONE sketch
-    * job materializes the d2-style signature table to scratch parquet,
-    * then each config only re-bands the persisted table
+    * job stages the d2-style signature table ([[graft.Tables.stage]]),
+    * then each config only re-bands the staged table
     * ([[Dedup.bandCandidates]]) — banding, not sketching, is the sweep
     * cost. Bucket cap 32 applies identically in both engines. */
   private val D22Cap = 32L

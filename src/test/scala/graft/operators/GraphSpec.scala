@@ -695,4 +695,38 @@ class GraphSpec extends AnyFunSuite {
     assert(got.toSeq == expect.sortBy(identity).toSeq)
     assert(runOnce().toSeq == got.toSeq) // deterministic
   }
+
+  test("round loops leave the same number of staged frames behind " +
+      "whatever the round count (superseded rounds are freed)") {
+    import spark.implicits._
+    spark.conf.unset("spark.graft.scratch.mode") // default `local` staging
+    // an 8-node chain (CC needs several rounds) plus a K4 on 20..23 (the
+    // 4-truss survives every round, so kTruss keeps peeling non-empty)
+    val e = edges(((0L until 7L).map(i => i -> (i + 1)) ++
+      Seq(20L -> 21L, 20L -> 22L, 20L -> 23L, 21L -> 22L, 21L -> 23L,
+        22L -> 23L)): _*)
+    val seeds = Seq(0L, 20L).toDF("id")
+    val feats = (0L until 24L).map(i => (i, i)).toDF("id", "f")
+    val loops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "labelPropagation" -> (r => Graph.labelPropagation(e, r)),
+      "seededDistance" -> (r => Graph.seededDistance(e, seeds, r)),
+      "kTruss" -> (r => Graph.kTruss(e, 4, r)),
+      "neighborAgg" -> (r => Graph.neighborAgg(e, feats, r)),
+      "connectedComponents" -> (r => Graph.connectedComponents(e, r)))
+    // persistent RDDs a call leaves behind: staging is eager, so the
+    // call itself stages (and should free) every round. The registry
+    // holds RDDs weakly, so the result is kept reachable until counted.
+    def leftBehind(run: => org.apache.spark.sql.DataFrame): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = run
+      val n = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      java.lang.ref.Reference.reachabilityFence(out)
+      n
+    }
+    loops.foreach { case (name, loop) =>
+      val (few, many) = (leftBehind(loop(1)), leftBehind(loop(4)))
+      assert(few == many,
+        s"$name: 1 round left $few staged frames, 4 rounds left $many")
+    }
+  }
 }
